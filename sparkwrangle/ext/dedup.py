@@ -1081,6 +1081,13 @@ def prefix_filter_pairs(
     )
 
 
+def _observed(obs) -> dict | None:
+    """``obs.get`` after the observed action, or None when Spark reported
+    no metrics for it (the observed node was pruned from the executed
+    plan) — ``Observation.get`` fails on that empty row instead."""
+    return obs.get if obs._jo.getRow().length() else None
+
+
 def edit_distance_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1166,19 +1173,19 @@ def edit_distance_pairs(
     # The short-string existence probe rides the prefix checkpoint job as
     # an Observation instead of its own take(1) job (guide §1/§5: one
     # fewer eager driver barrier per call). The observe sits ABOVE the
-    # length >= q gram filter, so sub-q strings ARE counted; Catalyst
-    # does not push filters below CollectMetrics (probed — the node must
-    # see exactly the rows of the Dataset it was attached to), so the
-    # count is over every non-null string. The gram subtree evaluates the
-    # observed node once per consuming branch, which can only OVERcount —
-    # the probe consumes a boolean (> 0), so that is harmless. sum() over
-    # an empty corpus is NULL → `or 0`.
+    # length >= q gram filter, so sub-q strings ARE seen; Catalyst does
+    # not push filters below CollectMetrics (probed — the node must see
+    # exactly the rows of the Dataset it was attached to), so the flag is
+    # over every non-null string. The gram subtree evaluates the observed
+    # node once per consuming branch, so the metric is a max (idempotent
+    # under re-evaluation, and a flag by construction) rather than a
+    # count. max() over no rows is NULL → no shorts.
     from pyspark.sql import Observation
 
     _short_obs = Observation()
     strs_obs = strs.observe(
         _short_obs,
-        F.sum((F.length("_s") < min_len_long).cast("long")).alias("n_short"),
+        F.max(F.length("_s") < min_len_long).alias("has_short"),
     )
     # distinct positional q-grams -> gram SET per string; the sequence
     # upper bound is always >= 0 after the length filter (sequence counts
@@ -1227,9 +1234,13 @@ def edit_distance_pairs(
     # the common case for entity keys — skip the whole banded subtree.
     # The existence bit was observed during the prefix checkpoint job
     # above (r14: previously a separate take(1) probe job; the
-    # Observation folds it into the job that runs anyway).
-    has_shorts = (_short_obs.get["n_short"] or 0) > 0
-    if has_shorts:
+    # Observation folds it into the job that runs anyway). Spark reports
+    # no metrics at all when it prunes the observed node, which it does
+    # when the gram subtree is empty (an empty corpus, or no string of q
+    # chars). Every string there is short, so run the pass: it is
+    # lossless whatever the flag, only skipping it needs the proof.
+    metrics = _observed(_short_obs)
+    if metrics is None or metrics["has_short"]:
         shorts = lens.filter(F.col("_len") < min_len_long).select(
             "_id",
             F.explode(

@@ -533,97 +533,67 @@ def _block_balances_local(feed: DataFrame, params: dict) -> DataFrame:
     return feed.select(*cols).groupBy("company", "block_id").applyInPandas(run, schema)
 
 
-def _block_combined_local(feed: DataFrame, params: dict) -> DataFrame:
-    """Relaxed-mode SINGLE local pass emitting BOTH relations as a tagged
-    union: the per-trade rows `_block_trades_local` would produce
-    (``is_trade=true``; tick columns null) and the per-tick balance rows
-    `_block_balances_local` would produce (``is_trade=false``; trade
-    columns null). ``pipelines.intraday.intraday_backtest`` uses this —
-    when BOTH outputs are requested, running the expensive per-(company,
-    block) Python state machine once and splitting JVM-side halves the
-    applyInPandas cost vs calling the two standalone operators (each of
-    which re-runs the feed; round-12 ADVICE item)."""
+def _combined_local(feed: DataFrame, params: dict, state_scope: str) -> DataFrame:
+    """SINGLE Python pass emitting BOTH relations as a tagged union: per-
+    trade rows (``is_trade=true``; tick columns null) and per-tick balance
+    rows (``is_trade=false``; trade columns null). Keyed by ``company`` in
+    faithful scope and by ``(company, block_id)`` in relaxed scope, where
+    each row also carries what the stitches need (``first_seq``,
+    ``bal_delta``, ``tick_seq``, ``block_last``; the same values
+    `_block_trades_local` / `_block_balances_local` emit). In faithful
+    scope ``trade_seq_local``/``roi_local`` ARE the trade log's
+    ``trade_seq``/``roi``. ``pipelines.intraday.intraday_backtest``
+    checkpoints this once and splits it JVM-side, so the per-group state
+    machine runs once however many times its two outputs are read."""
+    block = state_scope == "block"
+    keys = ["company", "block_id"] if block else ["company"]
     bal0 = float(params["bal"])
-    schema = (
-        f"company {_key_type(feed)}, block_id {_col_type(feed, 'block_id')}, "
-        "first_seq long, is_trade boolean, "
-        "trade_seq_local int, close_type string, roi_local double, "
-        "bal_delta double, "
-        "tick_seq int, ts timestamp, balance double, block_last boolean"
-    )
-    cols = [
-        "company", "block_id", "first_seq", "is_trade",
-        "trade_seq_local", "close_type", "roi_local", "bal_delta",
-        "tick_seq", "ts", "balance", "block_last",
+    fields = [(k, _col_type(feed, k)) for k in keys] + [
+        ("is_trade", "boolean"), ("trade_seq_local", "int"),
+        ("close_type", "string"), ("roi_local", "double"),
+        ("ts", "timestamp"), ("balance", "double"),
     ]
+    if block:
+        fields += [
+            ("first_seq", "long"), ("bal_delta", "double"),
+            ("tick_seq", "int"), ("block_last", "boolean"),
+        ]
+    cols = [c for c, _ in fields]
+    # the tagged union leaves the other tag's columns as object-NaN;
+    # coerce each half to Arrow-friendly nullable dtypes BEFORE the concat
+    # (uniformly-typed inputs — avoids both the all-NA concat FutureWarning
+    # and the serializer failing int/bool/ts casts)
+    nullable = {"int": "Int32", "long": "Int64", "double": "Float64", "boolean": "boolean"}
+    dtypes = {c: nullable[t] for c, t in fields[len(keys):] if t in nullable}
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         trades, history, balances = run_trader_on_feed(pdf, params)
-        company = pdf["company"].iloc[0]
-        block = pdf["block_id"].iloc[0]
-        first_seq = int(pdf["feed_seq"].min())
-        prev = [bal0] + balances[:-1]
+        group = {k: pdf[k].iloc[0] for k in keys}
         n = len(history)
         ts, bals = zip(*history) if history else ((), ())
-        trade_rows = pd.DataFrame(
-            {
-                "company": company,
-                "block_id": block,
-                "first_seq": first_seq,
-                "is_trade": True,
-                "trade_seq_local": range(len(trades)),
-                "close_type": [t for t, _ in trades],
-                "roi_local": [r for _, r in trades],
-                "bal_delta": [b - p for b, p in zip(balances, prev)],
-                "tick_seq": None,
-                "ts": pd.NaT,
-                "balance": None,
-                "block_last": None,
-            },
-            columns=cols,
-        )
-        tick_rows = pd.DataFrame(
-            {
-                "company": company,
-                "block_id": block,
-                "first_seq": first_seq,
-                "is_trade": False,
-                "trade_seq_local": None,
-                "close_type": None,
-                "roi_local": None,
-                "bal_delta": None,
-                "tick_seq": range(n),
-                "ts": list(ts),
-                "balance": list(bals),
-                "block_last": [i == n - 1 for i in range(n)],
-            },
-            columns=cols,
-        )
-        # the tagged union leaves the other tag's columns as object-NaN;
-        # coerce each half to Arrow-friendly nullable dtypes BEFORE the
-        # concat (uniformly-typed inputs — avoids both the all-NA concat
-        # FutureWarning and the serializer failing int/bool/ts casts)
-        dtypes = {
-            "trade_seq_local": "Int32",
-            "tick_seq": "Int32",
-            "roi_local": "Float64",
-            "bal_delta": "Float64",
-            "balance": "Float64",
-            "block_last": "boolean",
+        trade_cols = {
+            "trade_seq_local": range(len(trades)),
+            "close_type": [t for t, _ in trades],
+            "roi_local": [r for _, r in trades],
         }
-        for half in (trade_rows, tick_rows):
+        tick_cols = {"ts": list(ts), "balance": list(bals)}
+        if block:
+            group["first_seq"] = int(pdf["feed_seq"].min())
+            prev = [bal0] + balances[:-1]
+            trade_cols["bal_delta"] = [b - p for b, p in zip(balances, prev)]
+            tick_cols["tick_seq"] = range(n)
+            tick_cols["block_last"] = [i == n - 1 for i in range(n)]
+        halves = [
+            pd.DataFrame({**group, "is_trade": tag, **data}, columns=cols)
+            for tag, data in ((True, trade_cols), (False, tick_cols))
+        ]
+        for half in halves:
             half["ts"] = pd.to_datetime(half["ts"])
-        return pd.concat(
-            [trade_rows.astype(dtypes), tick_rows.astype(dtypes)],
-            ignore_index=True,
-        )
+        return pd.concat([h.astype(dtypes) for h in halves], ignore_index=True)
 
-    in_cols = ["company", "block_id", "feed_seq", "ts", "ticker_idx", "price", "ret"]
-    return (
-        feed.select(*in_cols)
-        .groupBy("company", "block_id")
-        .applyInPandas(run, schema)
-    )
+    schema = ", ".join(f"{c} {t}" for c, t in fields)
+    in_cols = keys + ["feed_seq", "ts", "ticker_idx", "price", "ret"]
+    return feed.select(*in_cols).groupBy(*keys).applyInPandas(run, schema)
 
 
 def _stitch_balances(local: DataFrame, params: dict) -> DataFrame:

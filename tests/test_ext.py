@@ -2368,6 +2368,32 @@ def test_edit_distance_join_plan_shape(spark):
     assert "windowspecdefinition(gram" not in plan
 
 
+def test_edit_distance_join_short_pass_gate(spark):
+    """The short-string pass (strings with < k*q+1 chars, outside the
+    prefix lemma) is gated by the observed ``has_short`` flag: it runs
+    (the candidate plan unions the banded short candidates) exactly when
+    some string is that short, and is skipped for an all-long corpus. A
+    corpus with no string of q chars (an empty one included) has an empty
+    gram subtree, which Spark prunes together with the observed node: the
+    pass then runs, so an empty corpus yields no pairs instead of failing
+    and sub-q pairs are still found."""
+    from sparkwrangle.ext.dedup import edit_distance_pairs
+
+    def run(rows):
+        corpus = spark.createDataFrame(rows, "doc_id long, s string")
+        out = edit_distance_pairs(corpus, "doc_id", "s", k=2, q=2)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return "Union" in plan, sorted(tuple(r) for r in out.collect())
+
+    # k=2, q=2: the short threshold is 6 chars
+    long_rows = [(0, "spark catalyst"), (1, "spark catalyze"), (2, "abcdef")]
+    assert run(long_rows + [(3, "abcde")]) == (True, [(0, 1, 2), (2, 3, 1)])
+    assert run(_edit_join_corpus(spark).collect())[0]
+    assert run(long_rows) == (False, [(0, 1, 2)])
+    assert run([])[1] == []
+    assert run([(0, "a"), (1, ""), (2, "b")]) == (True, [(0, 1, 1), (0, 2, 1), (1, 2, 1)])
+
+
 def test_edit_distance_join_validates_args(spark):
     import pytest as _pytest
 

@@ -630,7 +630,7 @@ def test_python_on_executor_sites_are_allowlisted():
         ("stateful/trader.py", "backtest_balances", "applyInPandas"): (1, "sequential trader state machine"),
         ("stateful/trader.py", "_block_trades_local", "applyInPandas"): (1, "sequential trader state machine, relaxed per-(company, block) scope"),
         ("stateful/trader.py", "_block_balances_local", "applyInPandas"): (1, "sequential trader state machine, relaxed per-(company, block) scope"),
-        ("stateful/trader.py", "_block_combined_local", "applyInPandas"): (1, "sequential trader state machine, relaxed scope — ONE pass emitting trades + balances as a tagged union (r12 ADVICE: halves the Python cost when intraday_backtest needs both)"),
+        ("stateful/trader.py", "_combined_local", "applyInPandas"): (1, "sequential trader state machine, faithful per-company AND relaxed per-(company, block) scope — ONE pass emitting trades + balances as a tagged union, so intraday_backtest runs the Python stage once however often its two outputs are read"),
     }
 
     root = os.path.dirname(sparkwrangle.__file__)
@@ -689,7 +689,7 @@ def test_checkpoint_sites_are_allowlisted():
         ("ext/graph.py", "_power_iterations"): (1, "per-round rank vector, vertex-sized"),
         ("ext/similarity.py", "pq_adc_topk"): (1, "trained codebook, m*K rows"),
         ("ext/text.py", "bpe_train"): (2, "per-round merge row + per-round symbol table, vocab-sized"),
-        ("pipelines/intraday.py", "intraday_backtest"): (1, "relaxed-mode combined local pass (ticks + trades rows — the relation the operator produces anyway); the lineage break is what lets the trade and balance stitches share ONE applyInPandas execution"),
+        ("pipelines/intraday.py", "intraday_backtest"): (1, "combined trader pass in either scope (ticks + trades rows — the relation the operator produces anyway); the lineage break is what lets the trade and balance outputs (relaxed: their stitches) and every report read over them share ONE applyInPandas execution"),
     }
 
     root = os.path.dirname(sparkwrangle.__file__)

@@ -242,35 +242,41 @@ def test_relaxed_fixed_sizing_warns_at_call_time(spark, feed_with_blocks):
     )
 
 
-def test_intraday_backtest_relaxed_single_pass(spark, feed_with_blocks):
-    """Round-12 ADVICE: intraday_backtest in relaxed mode runs the
-    per-(company, block) Python state machine ONCE — a combined tagged-
-    union local pass, checkpointed and split JVM-side. Pinned two ways:
-    (a) value parity with the standalone relaxed operators, (b) the
-    returned plans read from the checkpoint (no FlatMapGroupsInPandas
-    left in either output's physical plan)."""
+@pytest.mark.parametrize("state_scope", ["block", "company"])
+def test_intraday_backtest_single_pass(spark, feed_with_blocks, state_scope):
+    """intraday_backtest runs the Python state machine ONCE in either
+    scope — a combined tagged-union pass, checkpointed and split JVM-side.
+    Pinned two ways: (a) value parity with the standalone operators of the
+    same scope (faithful: the same Python code on the same groups, so
+    EXACT; relaxed: within 1e-9, the stitch's window arithmetic running
+    over a different plan), (b) the returned plans read from the
+    checkpoint (no FlatMapGroupsInPandas left in either output's physical
+    plan)."""
     trades, balances = intraday_backtest(
-        feed_with_blocks, TRADER_PARAMS, state_scope="block"
+        feed_with_blocks, TRADER_PARAMS, state_scope=state_scope
     )
+    tol = 0.0 if state_scope == "company" else 1e-9
     ref_trades = _trades_pdf(
-        backtest_trades(feed_with_blocks, TRADER_PARAMS, state_scope="block")
+        backtest_trades(feed_with_blocks, TRADER_PARAMS, state_scope=state_scope)
     )
     got_trades = _trades_pdf(trades)
+    assert len(got_trades) > 3, "fixture must produce trades"
     assert list(got_trades.company) == list(ref_trades.company)
     assert list(got_trades.trade_seq) == list(ref_trades.trade_seq)
     assert list(got_trades.close_type) == list(ref_trades.close_type)
     assert (
-        max(abs(got_trades.roi.to_numpy() - ref_trades.roi.to_numpy())) < 1e-9
+        max(abs(got_trades.roi.to_numpy() - ref_trades.roi.to_numpy())) <= tol
     )
 
     ref_bal = (
-        backtest_balances(feed_with_blocks, TRADER_PARAMS, state_scope="block")
+        backtest_balances(feed_with_blocks, TRADER_PARAMS, state_scope=state_scope)
         .orderBy("company", "ts")
         .toPandas()
     )
     got_bal = balances.orderBy("company", "ts").toPandas()
+    assert list(got_bal.company) == list(ref_bal.company)
     assert list(got_bal.ts) == list(ref_bal.ts)
-    assert max(abs(got_bal.balance.to_numpy() - ref_bal.balance.to_numpy())) < 1e-9
+    assert max(abs(got_bal.balance.to_numpy() - ref_bal.balance.to_numpy())) <= tol
 
     for df in (trades, balances):
         plan = df._jdf.queryExecution().executedPlan().toString()
